@@ -53,7 +53,8 @@ object Bench {
     * partition-starved shape `Model.scala` documents as the reason the
     * strategy exists). 256 deterministic candidates × all members keeps
     * the update O(n·s), fully parallel, and the medoid still exact w.r.t.
-    * the candidate set. */
+    * the candidate set. Within the histogram gates (`KMeans` scaladoc) the
+    * same rounds run on the driver over the feature-tuple histogram. */
   def flagshipKMedoids(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val features = Tables.eventFeatures(spark, dir).as[graft.model.TweetFeatures]

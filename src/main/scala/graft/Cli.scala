@@ -66,7 +66,8 @@ object Cli {
       val centroidLines = result.centroids.zipWithIndex
         .map { case (c, i) => s"$i\t${c.id}" }
       writeText(spark, s"$outDir/centroids", centroidLines)
-      println(s"[graft] cluster: k=$k iterations=${result.iterations} converged=${result.converged}")
+      println(s"[graft] cluster: k=$k iterations=${result.iterations} converged=${result.converged} " +
+        result.path.fold("path=distributed")(_.summary))
       println(result.centroids.zipWithIndex
         .map { case (c, i) => s"[graft]   centroid $i: id=${c.id} time=${c.time} tags=${c.numOfHashtags} lang=${c.language} video=${c.hasVideo}" }
         .mkString("\n"))

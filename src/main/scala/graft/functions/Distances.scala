@@ -31,12 +31,17 @@ object Distances {
   }
 
   /** Scala form on feature records — used by the driver-side convergence
-    * test (A9, `Cluster.java:355-382`) and typed-path kernels. */
+    * test (A9, `Cluster.java:355-382`) and the k-medoids histogram loop,
+    * whose assignments must agree with the Column form's. So it follows
+    * the Column form bit for bit: every field widens to double BEFORE
+    * the subtraction (no `Int` overflow), and the language term uses SQL
+    * null equality — `null = null` is null, so two null languages count
+    * as different (1.0), exactly as the `otherwise` branch above. */
   def weightedDistance(a: TweetFeatures, b: TweetFeatures, hashtagWeight: Double): Double = {
-    val dt = (a.time - b.time).toDouble
-    val dh = (a.numOfHashtags - b.numOfHashtags) * hashtagWeight
-    val dl = if (a.language == b.language) 0.0 else 1.0
-    val dv = (a.hasVideo - b.hasVideo).toDouble
+    val dt = a.time.toDouble - b.time.toDouble
+    val dh = (a.numOfHashtags.toDouble - b.numOfHashtags.toDouble) * hashtagWeight
+    val dl = if (a.language != null && a.language == b.language) 0.0 else 1.0
+    val dv = a.hasVideo.toDouble - b.hasVideo.toDouble
     math.sqrt(dt * dt + dh * dh + dl * dl + dv * dv)
   }
 

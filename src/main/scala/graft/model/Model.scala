@@ -24,11 +24,16 @@ final case class Assignment(id: Long, cluster: Int)
 
 /** Strategy for recomputing a cluster's representative point.
   *
-  *  - [[Medoid]] — exact O(n²)-per-cluster medoid, the reference's intended
-  *    algorithm (`Cluster.java:229-266`). Only viable when every cluster
-  *    fits the n² self-join; at 100 TB use [[SampledMedoid]] or [[Mean]].
+  *  - [[Medoid]] — exact medoid, the reference's intended algorithm
+  *    (`Cluster.java:229-266`). While the distinct (time, numOfHashtags,
+  *    language, hasVideo) tuples fit `KMeans.HistogramMaxTuples`, a run
+  *    costs two queries over the data plus O(|tuples|²) driver work per
+  *    round, at any n. Above that each round is the O(n²)-per-cluster self-join, viable
+  *    only when every cluster fits it; there use [[SampledMedoid]] or
+  *    [[Mean]].
   *  - [[SampledMedoid]] — candidates drawn deterministically (id-hash), each
-  *    scored against ALL members: O(n·s) instead of O(n²).
+  *    scored against ALL members: O(n·s) instead of O(n²) above the
+  *    histogram gates, the same two queries plus driver rounds below them.
   *  - [[Mean]] — classic k-means mean centroid (language = per-cluster mode);
   *    O(n), one shuffle, the true scale path.
   *

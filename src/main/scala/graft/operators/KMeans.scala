@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Distances
 import graft.model._
@@ -15,8 +16,18 @@ import graft.model._
   *   - assignment: a zero-shuffle narrow map over the feature table with the
   *     k centroids inlined as literals (k ≤ 5 — cheaper than a broadcast
   *     join, and fully inside whole-stage codegen);
-  *   - medoid update: ONE shuffle on the cluster key (self-join + partial
-  *     aggregation) instead of n² RPCs.
+  *   - medoid update, on the feature-tuple histogram: the distance reads
+  *     only (time, numOfHashtags, language, hasVideo), all low-cardinality,
+  *     so a row's cluster and a candidate's total distance depend only on
+  *     its feature TUPLE. [[run]] reads the features into the
+  *     distinct-tuple histogram (member count + candidate rows per tuple:
+  *     one counting query for the gates, one candidate query) and runs
+  *     every round on the driver with no Spark job — O(|tuples|²) work
+  *     per round, exact;
+  *   - above the histogram gates (exact counts, [[HistogramMaxTuples]],
+  *     [[HistogramMaxCandidateRows]]) and for [[Mean]], each round is a
+  *     distributed update instead: ONE shuffle on the cluster key
+  *     (self-join + partial aggregation) instead of n² RPCs.
   *
   * Deviations from reference defects, all per SURVEY §2.8: true argmin
   * (ref. never updates `minDistance`, `Cluster.java:109-115`), true medoid
@@ -31,7 +42,24 @@ object KMeans {
       centroids: Seq[TweetFeatures],
       iterations: Int,
       converged: Boolean,
-      trajectory: Seq[Seq[TweetFeatures]]) // centroids per iteration, for golden tests
+      trajectory: Seq[Seq[TweetFeatures]], // centroids per iteration, for golden tests
+      path: Option[LoopPath]) // None for Mean, which builds no histogram
+
+  /** Which loop [[run]] took, with the exact histogram counts its gate
+    * read: distinct feature tuples and candidate rows Σ_t min(n_t, s)
+    * (one per tuple for [[Medoid]]). */
+  final case class LoopPath(histogram: Boolean, tuples: Long, candidateRows: Long) {
+    def summary: String = s"path=${if (histogram) "histogram" else "distributed"} " +
+      s"tuples=$tuples candidates=$candidateRows"
+  }
+
+  /** Gates of the histogram loop. Its driver state is one entry per
+    * distinct tuple plus the candidate rows, and a round costs
+    * O(|tuples|²) distance evaluations (16.8 M at the limit). */
+  val HistogramMaxTuples = 4096
+  val HistogramMaxCandidateRows = 1L << 20
+
+  private val tupleCols = Seq("time", "numOfHashtags", "language", "hasVideo")
 
   private val featureCols = Seq("id", "numOfHashtags", "language", "hasVideo",
     "replyCount", "retweetCount", "likeCount", "time")
@@ -86,7 +114,7 @@ object KMeans {
     val schema = StructType(centroids.indices.flatMap(i => Seq(
       StructField(s"_c${i}_time", IntegerType, nullable = false),
       StructField(s"_c${i}_tags", IntegerType, nullable = false),
-      StructField(s"_c${i}_lang", StringType, nullable = false),
+      StructField(s"_c${i}_lang", StringType, nullable = true),
       StructField(s"_c${i}_video", IntegerType, nullable = false))))
     val values = centroids.flatMap(c =>
       Seq(c.time, c.numOfHashtags, c.language, c.hasVideo))
@@ -142,28 +170,29 @@ object KMeans {
     * Salted 8 ways so a small k can't starve the cluster (Medoids
     * scaladoc): the scale strategy should itself scale. */
   def sampledMedoids(members: DataFrame, sampleSize: Int,
-      hashtagWeight: Double = 0.8): DataFrame = {
-    // TWO-LEVEL exact top-s selection: a single per-cluster window is a
-    // k-partition sort (data-sized partitions at any k ≪ cores — the
-    // same shape the registry's global-window gate exists for). Level 1
-    // ranks within (cluster, idHash mod 64) and keeps s per salt-bucket
-    // — every global top-s row survives its own bucket's cut — and
-    // level 2 re-ranks the ≤ 64·s survivors per cluster. The (order key,
-    // id) total order makes both levels deterministic and the selected
-    // set IDENTICAL to the single-window form (KMeansSpec pins it).
-    val wSalt = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"), pmod(hash(col("id")), lit(64)))
-      .orderBy(seedHashOrder, col("id"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster"))
-      .orderBy(seedHashOrder, col("id"))
-    val candidates = members
-      .withColumn("rn1", row_number().over(wSalt))
-      .filter(col("rn1") <= sampleSize)
+      hashtagWeight: Double = 0.8): DataFrame =
+    medoidOf(smallestPerGroup(members, Seq(col("cluster")), seedHashOrder, sampleSize),
+      members, hashtagWeight, saltBuckets = 8)
+
+  /** The `s` rows of each `keys` group smallest by (`order`, id).
+    * TWO-LEVEL exact top-s selection: a single per-group window is a
+    * k-partition sort (data-sized partitions at any k ≪ cores — the
+    * same shape the registry's global-window gate exists for). Level 1
+    * ranks within (group, idHash mod 64) and keeps s per salt-bucket
+    * — every global top-s row survives its own bucket's cut — and
+    * level 2 re-ranks the ≤ 64·s survivors per group. The (order key,
+    * id) total order makes both levels deterministic and the selected
+    * set IDENTICAL to the single-window form (KMeansSpec pins it). */
+  private def smallestPerGroup(df: DataFrame, keys: Seq[Column], order: Column,
+      s: Int): DataFrame = {
+    val wSalt = Window.partitionBy(keys :+ pmod(hash(col("id")), lit(64)): _*)
+      .orderBy(order, col("id"))
+    val w = Window.partitionBy(keys: _*).orderBy(order, col("id"))
+    df.withColumn("rn1", row_number().over(wSalt))
+      .filter(col("rn1") <= s)
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= sampleSize)
+      .filter(col("rn") <= s)
       .drop("rn1", "rn")
-    medoidOf(candidates, members, hashtagWeight, saltBuckets = 8)
   }
 
   /** [[meanCentroids]] resolved to synthetic TweetFeatures rows
@@ -231,46 +260,150 @@ object KMeans {
         prev.indices.map(i => resolved.getOrElse(i, prev(i)))
     }
 
-  /** The full iterative loop (§3.2): assign → update centroids → converge?
-    * Features are cached across iterations (the reference re-scans HBase
-    * every iteration); the convergence test (A9) runs driver-side on the
-    * k collected centroids against `cfg.convergenceLimit`.
-    */
-  def run(features: Dataset[TweetFeatures], cfg: KMeansConfig): Result = {
-    val spark = features.sparkSession
-    // Spread a narrow scan across the cores before caching: the medoid
-    // update BROADCASTS the candidate side, so the O(n·s) distance sums
-    // run in the MEMBERS' partitioning — and a single-row-group parquet
-    // scan (or any under-split input) pins that compute to 1-2 tasks
-    // however many cores exist (measured at sf0.1: 2.1-2.7 s per
-    // iteration on one core vs ~0.15 s spread). Deterministic hash
-    // repartition by id; a no-op whenever the scan already carries at
-    // least default parallelism (any production-sized input).
-    val df0 = features.toDF()
-    val p = spark.sparkContext.defaultParallelism
-    val df = if (df0.rdd.getNumPartitions < p) df0.repartition(p, col("id")) else df0
-    df.cache()
-    try {
-      val seedIds = if (cfg.seeds.nonEmpty) cfg.seeds else deterministicSeeds(df, cfg.k)
-      var centroids = resolveCentroids(features, seedIds)
-      val trajectory = scala.collection.mutable.ArrayBuffer[Seq[TweetFeatures]](centroids)
-      var iter = 0
-      var converged = false
-      while (iter < cfg.maxIterations && !converged) {
-        val members = assignWithFeaturesParam(df, centroids, cfg.hashtagWeight)
-        val next = updateCentroids(members, features, centroids, cfg)
-        converged = centroids.zip(next).forall { case (a, b) =>
-          Distances.weightedDistance(a, b, cfg.hashtagWeight) <= cfg.convergenceLimit
-        }
-        centroids = next
-        trajectory += centroids
-        iter += 1
+  /** One feature tuple of the histogram: its member count and its
+    * candidate rows, ascending by (order key, id). */
+  private final case class FeatureTuple(n: Long, cands: IndexedSeq[(Long, TweetFeatures)]) {
+    def f: TweetFeatures = cands.head._2
+  }
+
+  /** The histogram loop's input, read off the features: the exact gate
+    * counts, and — when both are within the gates — every distinct
+    * tuple with its candidates: for [[SampledMedoid]](s) its s smallest
+    * (seed-hash order, id) rows, for [[Medoid]] its min-id row. */
+  private def histogram(df: DataFrame, cfg: KMeansConfig, maxTuples: Int,
+      maxCandidateRows: Long): (LoopPath, Option[IndexedSeq[FeatureTuple]]) = {
+    import df.sparkSession.implicits._
+    val (perTuple, order) = cfg.strategy match {
+      case SampledMedoid(s) => (s, seedHashOrder)
+      case _ => (1, col("id"))
+    }
+    val counts = df.groupBy(tupleCols.map(col): _*).agg(count(lit(1)).as("n"))
+    val small = counts.limit(maxTuples + 1).collect()
+    if (small.length > maxTuples) {
+      val exact = counts.agg(count(lit(1)), sum(least(col("n"), lit(perTuple.toLong)))).head()
+      return (LoopPath(histogram = false, exact.getLong(0), exact.getLong(1)), None)
+    }
+    val candidateRows = small.map(r => math.min(r.getLong(4), perTuple.toLong)).sum
+    if (candidateRows > maxCandidateRows)
+      return (LoopPath(histogram = false, small.length, candidateRows), None)
+    val n = small.map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getInt(3)) -> r.getLong(4)).toMap
+    val tuples = smallestPerGroup(df, tupleCols.map(col), order, perTuple)
+      .select(order.as("key"), struct(featureCols.map(col): _*).as("f"))
+      .as[(Long, TweetFeatures)].collect()
+      .groupBy { case (_, f) => (f.time, f.numOfHashtags, f.language, f.hasVideo) }
+      .toIndexedSeq
+      // a fixed tuple order fixes the summation order of the totals
+      .sortBy { case ((t, h, l, v), _) => (t, h, Option(l), v) }
+      .map { case (k, cs) => FeatureTuple(n(k), cs.sortBy { case (key, f) => (key, f.id) }.toIndexedSeq) }
+    (LoopPath(histogram = true, small.length, candidateRows), Some(tuples))
+  }
+
+  /** One centroid-update round on the driver, over the histogram — the
+    * round [[updateCentroids]] runs distributed, with no Spark job:
+    * tuples go to their first nearest centroid (the same kernel, bit for
+    * bit, as the Spark-side assignment); a cluster's candidates are the
+    * top s by (key, id) of the union of its tuples' candidate lists —
+    * exact, as the cluster's global top s lies inside that union; a
+    * candidate scores T(t) = Σ_u n_u·d(t, u) over the cluster's tuples
+    * and the least (T, id) wins. Empty clusters keep their previous
+    * centroid. */
+  private def histogramStep(tuples: IndexedSeq[FeatureTuple], cfg: KMeansConfig)(
+      centroids: Seq[TweetFeatures]): Seq[TweetFeatures] = {
+    val hw = cfg.hashtagWeight
+    val s = cfg.strategy match {
+      case SampledMedoid(s) => s
+      case _ => Int.MaxValue
+    }
+    val cluster = tuples.map { u =>
+      val d = centroids.map(Distances.weightedDistance(u.f, _, hw))
+      d.indices.reduceLeft((best, j) => if (d(j) < d(best)) j else best)
+    }
+    centroids.indices.map { j =>
+      val members = tuples.indices.filter(cluster(_) == j)
+      if (members.isEmpty) centroids(j)
+      else {
+        val cands = members
+          .flatMap(t => tuples(t).cands.map { case (key, f) => (key, f, t) })
+          .sortBy { case (key, f, _) => (key, f.id) }
+          .take(s)
+        val total = cands.map(_._3).distinct.map { t =>
+          t -> members.foldLeft(0.0) { (acc, u) =>
+            acc + tuples(u).n * Distances.weightedDistance(tuples(t).f, tuples(u).f, hw)
+          }
+        }.toMap
+        cands.minBy { case (_, f, t) => (total(t), f.id) }(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))._2
       }
-      // the final assignment reuses the loop's generated classes too
-      val finalAssign = assignWithFeaturesParam(df, centroids, cfg.hashtagWeight)
-        .select("id", "cluster")
-      Result(finalAssign, centroids, iter, converged, trajectory.toSeq)
-    } finally df.unpersist()
+    }
+  }
+
+  /** The full iterative loop (§3.2): assign → update centroids → converge?
+    * Medoid strategies run their rounds on the feature-tuple histogram
+    * while it is within the gates: two queries build it, and the job
+    * count no longer grows with the iterations. Otherwise
+    * (and for [[Mean]]) each round is distributed over features cached
+    * across iterations (the reference re-scans HBase every iteration).
+    * Both loops yield the same result (KMeansHistogramSpec pins it). The
+    * convergence test (A9) runs driver-side on the k centroids against
+    * `cfg.convergenceLimit`.
+    */
+  def run(features: Dataset[TweetFeatures], cfg: KMeansConfig): Result =
+    run(features, cfg, HistogramMaxTuples, HistogramMaxCandidateRows)
+
+  /** [[run]] with the histogram gates as parameters, so specs can force
+    * either loop on the same input. */
+  private[graft] def run(features: Dataset[TweetFeatures], cfg: KMeansConfig,
+      maxTuples: Int, maxCandidateRows: Long): Result = {
+    val seedIds = if (cfg.seeds.nonEmpty) cfg.seeds else deterministicSeeds(features.toDF(), cfg.k)
+    val seeds = resolveCentroids(features, seedIds)
+    val (path, tuples) = cfg.strategy match {
+      case Mean => (None, None)
+      case _ =>
+        val (p, t) = histogram(features.toDF(), cfg, maxTuples, maxCandidateRows)
+        (Some(p), t)
+    }
+    tuples match {
+      case Some(t) => iterate(features.toDF(), seeds, cfg, path, histogramStep(t, cfg))
+      case None =>
+        // Spread a narrow scan across the cores before caching: the medoid
+        // update BROADCASTS the candidate side, so the O(n·s) distance sums
+        // run in the MEMBERS' partitioning — and a single-row-group parquet
+        // scan (or any under-split input) pins that compute to 1-2 tasks
+        // however many cores exist (measured at sf0.1: 2.1-2.7 s per
+        // iteration on one core vs ~0.15 s spread). Deterministic hash
+        // repartition by id; a no-op whenever the scan already carries at
+        // least default parallelism (any production-sized input).
+        val df0 = features.toDF()
+        val p = features.sparkSession.sparkContext.defaultParallelism
+        val df = if (df0.rdd.getNumPartitions < p) df0.repartition(p, col("id")) else df0
+        df.cache()
+        try iterate(df, seeds, cfg, path, c =>
+          updateCentroids(assignWithFeaturesParam(df, c, cfg.hashtagWeight), features, c, cfg))
+        finally df.unpersist()
+    }
+  }
+
+  /** The rounds of [[run]] from the seed centroids, each produced by
+    * `step`, then the final assignment of `df`. */
+  private def iterate(df: DataFrame, seeds: Seq[TweetFeatures], cfg: KMeansConfig,
+      path: Option[LoopPath], step: Seq[TweetFeatures] => Seq[TweetFeatures]): Result = {
+    var centroids = seeds
+    val trajectory = scala.collection.mutable.ArrayBuffer[Seq[TweetFeatures]](centroids)
+    var iter = 0
+    var converged = false
+    while (iter < cfg.maxIterations && !converged) {
+      val next = step(centroids)
+      converged = centroids.zip(next).forall { case (a, b) =>
+        Distances.weightedDistance(a, b, cfg.hashtagWeight) <= cfg.convergenceLimit
+      }
+      centroids = next
+      trajectory += centroids
+      iter += 1
+    }
+    // the iteration-stable form: reuses the distributed rounds' generated classes
+    val finalAssign = assignWithFeaturesParam(df, centroids, cfg.hashtagWeight)
+      .select("id", "cluster")
+    Result(finalAssign, centroids, iter, converged, trajectory.toSeq, path)
   }
 
   /** A8 replacement for unseeded sampling: deterministic k distinct seed ids

@@ -53,4 +53,30 @@ class DistancesSpec extends SparkSpec {
     val want = pairs.map { case (a, b) => Distances.weightedDistance(a, b) }
     assert(got.toSeq === want)
   }
+
+  test("Scala form == Column form bit for bit: null languages, Int extremes (generated)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val edges = Array(Int.MinValue, Int.MinValue + 1, -1, 0, 1, 3, 49, Int.MaxValue - 1, Int.MaxValue)
+    def anInt() = if (rnd.nextBoolean()) edges(rnd.nextInt(edges.length)) else rnd.nextInt()
+    val langs = Array("en", "tr", "", null)
+    def rand() = tf(anInt(), anInt(), langs(rnd.nextInt(langs.length)), anInt())
+    val pairs = (1 to 4000).map(_ => (rand(), rand())) :+
+      (tf(0, 0, null, 0), tf(0, 0, null, 0)) // SQL: null = null is not true
+    val df = pairs.map { case (a, b) =>
+      (a.time, a.numOfHashtags, a.language, a.hasVideo,
+        b.time, b.numOfHashtags, b.language, b.hasVideo)
+    }.toDF("t1", "h1", "l1", "v1", "t2", "h2", "l2", "v2")
+    for (w <- Seq(0.8, 1.0)) {
+      val got = df.select(Distances.weightedDistance(
+        col("t1"), col("h1"), col("l1"), col("v1"),
+        col("t2"), col("h2"), col("l2"), col("v2"), w))
+        .collect().map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).toSeq
+      val want = pairs.map { case (a, b) =>
+        java.lang.Double.doubleToRawLongBits(Distances.weightedDistance(a, b, w))
+      }
+      assert(got === want)
+    }
+    assert(Distances.weightedDistance(tf(0, 0, null, 0), tf(0, 0, null, 0)) === 1.0)
+  }
 }
