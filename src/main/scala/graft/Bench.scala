@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.KMeansConfig
 import graft.operators.KMeans
+import graft.plans.GraftRuntime
 
 /** Benchmark main: times every registry query plus the flagship iterative
   * k-medoids loop at `SPARK_GRAFT_SF_DIR`, printing ONE JSON line.
@@ -109,17 +110,8 @@ object Bench {
     (SparkEntry.queries.toSeq ++ Seq("q00_flagship_kmedoids" -> (flagshipKMedoids _)))
       .sortBy(_._1)
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
-    spark
-  }
+  private def newSession(): SparkSession =
+    GraftRuntime.session("graft-bench", GraftRuntime.localCpus(32))
 
   /** One task-metrics listener per live CONTEXT (repeated [[runQueries]]
     * calls on the parent's inline-fallback session must not stack
@@ -439,7 +431,7 @@ object Bench {
     * The chunk's own machine-probe reading rides back as a pseudo-row,
     * so a contention window that opens mid-run is localized to its
     * chunk instead of averaged into the run-level start/end probes. */
-  private def childMain(sfDir: String, cpus: String, reps: Int): Unit = {
+  private def childMain(sfDir: String, reps: Int): Unit = {
     val names = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "").split(',').toSeq.filter(_.nonEmpty)
     val out = sys.env("SPARK_GRAFT_BENCH_OUT")
     val probeSec = machineProbeSec()
@@ -448,7 +440,7 @@ object Bench {
     val trimRef =
       if (sys.env.contains("SPARK_GRAFT_BENCH_NO_TRIM")) None
       else readRef(BaselinePath).filter(_.sf.contains(sfDir))
-    val spark = newSession(cpus)
+    val spark = newSession()
     val rows = runQueries(spark, sfDir, names, reps, withCanary = true, trimRef = trimRef) :+
       QueryResult(ChunkProbeName, Seq(probeSec), 0.0, 0.0)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
@@ -499,7 +491,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // floor at 3 UNLESS the user set the env var themselves: with n=2 the
     // reported "median" is the worse run, but silently overriding an
     // explicit reps=1 for a quick local loop is worse (ADVICE r3)
@@ -518,7 +509,7 @@ object Bench {
       return
     }
 
-    if (sys.env.contains("SPARK_GRAFT_BENCH_CHILD")) return childMain(sfDir, cpus, reps)
+    if (sys.env.contains("SPARK_GRAFT_BENCH_CHILD")) return childMain(sfDir, reps)
 
     // optional comma-separated prefix filter for local iteration, e.g.
     // SPARK_GRAFT_BENCH_ONLY=q46,q48 — the driver never sets it
@@ -553,7 +544,7 @@ object Bench {
     def elapsedSec: Double = (System.nanoTime() - t0) / 1e9
 
     // lazily created only if a child spawn fails and a chunk runs inline
-    lazy val inlineSpark = newSession(cpus)
+    lazy val inlineSpark = newSession()
     val tmpDir = java.nio.file.Files.createTempDirectory("graft-bench")
     System.err.println(s"[bench] chunk logs + partials: $tmpDir")
     val pseudo = Set(CanaryName, CanaryEndName, ChunkProbeName)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.model._
 import graft.operators.{Analysis, KMeans}
 import graft.sources.{AssignmentIO, TweetIngest}
+import graft.plans.GraftRuntime
 
 /** Command-line entry points mirroring the reference's five mains, so a
   * user of the reference can switch 1:1 (SURVEY §3, §7.1 `cli.scala`):
@@ -25,15 +26,9 @@ import graft.sources.{AssignmentIO, TweetIngest}
 object Cli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName(s"graft-${args.headOption.getOrElse("help")}")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = GraftRuntime.session(
+      s"graft-${args.headOption.getOrElse("help")}",
+      GraftRuntime.localCpus(4), master = sys.env.get("SPARK_MASTER"))
     try run(spark, args.toList)
     finally spark.stop()
   }

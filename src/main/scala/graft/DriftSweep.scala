@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
+import graft.plans.GraftRuntime
 
 /** Prices the index-drift staleness thresholds (round-12 verdict #6):
   * `tvd ≥ 0.10` / `maxGrowth ≥ 4` were asserted, not measured — no
@@ -91,16 +92,9 @@ object DriftSweep {
     val lambdas = sys.env.getOrElse("SPARK_GRAFT_DRIFT_LAMBDAS", "0.05,0.1,0.2,0.4")
       .split(",").map(_.trim.toDouble).toSeq.sorted
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-driftsweep").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = GraftRuntime.session("graft-driftsweep",
+      GraftRuntime.localCpus(32), conf = Map("spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-driftsweep").toString))
 
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
     def emit(row: String): Unit = { rows += row; println(row) }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftRuntime
 
 /** Plan inspector: `runMain graft.Explain <sfDir> [queryPrefix...]` prints
   * the formatted physical plan of each selected registry query — the
@@ -10,13 +10,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val prefixes = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftRuntime.session("graft-explain", GraftRuntime.localCpus(4))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
       .foreach { case (name, fn) =>

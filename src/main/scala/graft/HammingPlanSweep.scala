@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftRuntime
 import org.apache.spark.sql.functions._
 
 /** Wall-time sweep of the q45c assignment pipeline under each PINNED
@@ -19,14 +19,7 @@ object HammingPlanSweep {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
     val plans = sys.env.getOrElse("SPARK_GRAFT_HAMMING_PLANS", "7:1,8:2,9:3,10:4")
       .split(',').map { s => val Array(m, c) = s.split(':').map(_.trim.toInt); (m, c) }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = GraftRuntime.session("graft-hamming-sweep", GraftRuntime.localCpus(32))
 
     val probe = org.apache.spark.graftnative.TaskMetricsProbe.install(spark.sparkContext)
     val docs = graft.operators.Dedup.withNearDuplicates(

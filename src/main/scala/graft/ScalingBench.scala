@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftRuntime
 
 /** Empirical scaling-slope harness: replicates the sf0.1 corpus 4× and
   * 16× and times the headline bucketed operators at each scale, turning
@@ -297,20 +298,7 @@ object ScalingBench {
     if (extraConf.nonEmpty)
       System.err.println(s"[scaling] EXPERIMENT confs ${extraConf.mkString(",")} -> $outPath")
 
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local mode defaults to ONE task attempt; the ×256 spill-heavy
-      // rows hit a transient LZ4/GCLocker read failure once in ~45 k
-      // tasks and a single retry absorbs it (cluster default is 4 —
-      // this just restores that posture for the measurement harness)
-      .config("spark.task.maxFailures", "4")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftRuntime.enable(spark)
+    val spark = GraftRuntime.session("graft-scaling", GraftRuntime.localCpus(32), conf = extraConf.toMap)
 
     val tables = sys.env.get("SPARK_GRAFT_SCALE_TABLES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

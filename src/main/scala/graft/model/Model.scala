@@ -37,8 +37,9 @@ final case class Assignment(id: Long, cluster: Int)
   *  - [[Mean]] — classic k-means mean centroid (language = per-cluster mode);
   *    O(n), one shuffle, the true scale path.
   *
-  * PRICED, not guessed (round-11 verdict #6 — `MedoidStrategySweep`,
-  * SCALING.md's medoid-strategy table): at every measured scale the
+  * PRICED, not guessed (round-11 verdict #6 — SCALING.md's
+  * medoid-strategy table, measured on the distributed update that now
+  * runs only above the histogram gates): at every measured scale the
   * k-medoids objective a candidate budget gives up is
   *
   *   - s = 256: regret ≤ 0.11% and SHRINKING with n (0.112% at 100 k

@@ -25,11 +25,9 @@ object GraphOps {
     * the EXACT wedge count (from out-degrees, O(m)) as well as the edge
     * count — a dense sub-threshold graph with a quadratic wedge set
     * still takes the distributed join. 16 M wedges ≈ a few hundred ms
-    * of hash probes. Overridable via SPARK_GRAFT_TRI_LOCAL_MAX_WEDGES
-    * (0 forces the distributed census — the spec pin uses it). */
-  val LocalMaxWedges: Long =
-    sys.env.get("SPARK_GRAFT_TRI_LOCAL_MAX_WEDGES").map(_.toLong)
-      .getOrElse(16000000L)
+    * of hash probes. `triangleCount(localMaxWedges = 0)` forces the
+    * distributed census past a passing edge gate (AnalyticsOpsSpec). */
+  val LocalMaxWedges: Long = 16000000L
 
   /** Support-filtered co-occurrence pairs: for rows (group, item), count
     * per unordered item pair (a < b) the number of DISTINCT groups
@@ -237,7 +235,8 @@ object GraphOps {
     * on (high-cardinality) node ids. Output is the one-row graph census
     * (nodes, edges, wedges, triangles). */
   def triangleCount(edges: DataFrame, aCol: String, bCol: String,
-      localMaxEdges: Long = Dedup.DefaultCcLocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = Dedup.DefaultCcLocalMaxEdges,
+      localMaxWedges: Long = LocalMaxWedges): DataFrame = {
     // edge list and oriented edges are each consumed by several census
     // branches — lazy localCheckpoints (the iterative-loop idiom) pin
     // them so the upstream graph build runs ONCE, not once per count
@@ -293,7 +292,7 @@ object GraphOps {
         var nWedges = 0L
         val dit = adj.values().iterator()
         while (dit.hasNext) { val d = dit.next().size.toLong; nWedges += d * (d - 1) / 2 }
-        if (nWedges <= LocalMaxWedges) {
+        if (nWedges <= localMaxWedges) {
           graft.streaming.StreamOps.releaseCheckpoint(e)
           var nTriangles = 0L
           val ait = adj.values().iterator()

@@ -198,7 +198,7 @@ object KMeans {
   /** [[meanCentroids]] resolved to synthetic TweetFeatures rows
     * (id = −(cluster+1); integer feature fields rounded — the form the
     * iterative loop carries between rounds). Driver-side: k rows. */
-  def meanCentroidFeatures(members: DataFrame): Map[Int, TweetFeatures] =
+  private def meanCentroidFeatures(members: DataFrame): Map[Int, TweetFeatures] =
     meanCentroids(members)
       .collect().map { r =>
         r.getAs[Int]("cluster") -> TweetFeatures(

@@ -2,7 +2,7 @@ package org.apache.spark.graftnative
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, Success}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Run-wide task-metric accumulator for the scaling harness: sums
@@ -25,9 +25,13 @@ final class TaskMetricsProbe private () extends SparkListener {
   private val diskSpill = new LongAdder
   private val memSpill = new LongAdder
 
+  /** Successful attempts only: a failed attempt that the scheduler
+    * retries reports the bytes it got through before failing, and
+    * counting them would make a retried run's signature differ from a
+    * clean run's. */
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
-    if (m != null) {
+    if (m != null && e.reason == Success) {
       shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
       shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
       diskSpill.add(m.diskBytesSpilled)

@@ -588,11 +588,13 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(lv === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 2, 5L -> 3))
   }
 
+  // overlapping triangles + hub + duplicate/reversed edges + a 2-path
+  private def censusEdges = (Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 1L),
+    (2L, 1L), (5L, 6L), (6L, 7L)) ++ (10L to 40L).map(i => (1L, i)))
+    .toDF("a", "b")
+
   test("triangleCount: driver-local census == distributed census") {
-    // overlapping triangles + hub + duplicate/reversed edges + a 2-path
-    val edges = (Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 1L),
-      (2L, 1L), (5L, 6L), (6L, 7L)) ++ (10L to 40L).map(i => (1L, i)))
-      .toDF("a", "b")
+    val edges = censusEdges
     val local = GraphOps.triangleCount(edges, "a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).head
     // localMaxEdges = 0 forces the distributed census on the same input
@@ -600,6 +602,24 @@ class AnalyticsOpsSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).head
     assert(local === dist, s"local $local vs distributed $dist")
+  }
+
+  test("triangleCount: wedge gate falls through to the distributed census") {
+    // the edge gate passes (a few dozen edges), but localMaxWedges = 0
+    // rejects the local wedge loop: the census runs distributed and must
+    // equal the driver-local one
+    val edges = censusEdges
+    def census(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).head
+    def joins(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.size
+    val localDf = GraphOps.triangleCount(edges, "a", "b")
+    val gatedDf = GraphOps.triangleCount(edges, "a", "b", localMaxWedges = 0L)
+    assert(joins(localDf) === 0, "the driver-local census is a one-row leaf")
+    assert(joins(gatedDf) > 0, "the wedge-gated census must run the distributed joins")
+    val (local, gated) = (census(localDf), census(gatedDf))
+    assert(local === gated, s"local $local vs wedge-gated $gated")
+    assert(local._4 === 2L, s"two triangles (1-2-3, 1-3-4), got $local")
   }
 
   test("pageRankScaled: driver-local fixed point == distributed, string nodes") {

@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
   *     non-equi join). The round-2 rewrites turned every pair generator
   *     into bucketed equi-joins — this pins that shape so later edits
   *     can't silently regress to quadratic plans.
+  *  3. Source gate: one session factory, and no env reads inside the
+  *     operator, function, query, source, streaming, plan and model
+  *     layers.
   */
 class QualityGatesSpec extends SparkSpec {
 
@@ -517,5 +520,33 @@ class QualityGatesSpec extends SparkSpec {
     }
     assert(offenders.isEmpty,
       s"wide/unrenderable output types (cast to BIGINT/DOUBLE before the final select): ${offenders.mkString("; ")}")
+  }
+
+  test("source gate: one session factory, no env reads inside the engine's layers") {
+    // every entry point and the test session build through
+    // GraftRuntime.session, and operators take thresholds as parameters
+    // with constant defaults: a second session builder or an env knob
+    // read inside a layer fails here. The factory's SPARK_GRAFT_CPUS read
+    // is the one env read the layers keep.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def hits(roots: Seq[String], pattern: scala.util.matching.Regex): Seq[String] =
+      roots.flatMap(r => Files.walk(Paths.get(r)).iterator().asScala)
+        .filter(_.toString.endsWith(".scala")).map(_.toString).sorted
+        .flatMap { f =>
+          Files.readAllLines(Paths.get(f)).asScala.zipWithIndex.collect {
+            case (line, i) if pattern.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+          }
+        }
+    val factory = "src/main/scala/graft/plans/GraftRuntime.scala:"
+    val builders = hits(Seq("src/main", "src/test"), "SparkSession\\.builder".r)
+    assert(builders.size == 1 && builders.head.startsWith(factory),
+      s"session builders outside GraftRuntime.session: ${builders.mkString("; ")}")
+    val layers = Seq("operators", "functions", "queries", "sources", "streaming", "plans", "model")
+      .map(d => s"src/main/scala/graft/$d")
+    val envReads = hits(layers, "sys\\.env|System\\.getenv".r)
+    assert(envReads.size == 1 && envReads.head.startsWith(factory) &&
+        envReads.head.contains("SPARK_GRAFT_CPUS"),
+      s"env reads inside the engine's layers (take a parameter instead): ${envReads.mkString("; ")}")
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.GraftRuntime
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -15,17 +16,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    // pinned at 4 cores whatever SPARK_GRAFT_CPUS says: specs that read
+    // partition-dependent shapes must not change with the host
+    val s = GraftRuntime.session("graft-tests", 4, conf = Map(
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
     s.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftRuntime.enable(s)
     s
   }
 }

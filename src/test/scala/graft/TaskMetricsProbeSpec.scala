@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.TaskContext
 import org.apache.spark.graftnative.TaskMetricsProbe
 import org.apache.spark.sql.functions._
 
@@ -39,6 +40,32 @@ class TaskMetricsProbeSpec extends SparkSpec {
     assert(w2 === 0L && r2 === 0L,
       s"no-exchange job must not register shuffle bytes, got read=$r2 write=$w2")
     // the session is JVM-shared across suites: do not leak the listener
+    } finally sc.removeSparkListener(probe)
+  }
+
+  test("probe counts successful attempts only: a retried task leaves the byte signature unchanged") {
+    val sc = spark.sparkContext
+    val probe = TaskMetricsProbe.install(sc)
+    try {
+      def signature(failFirstAttempt: Boolean): (Long, Long, Long, Long) = {
+        probe.reset()
+        spark.range(0, 100000).select((col("id") % 97).as("k"))
+          .groupBy("k").count().rdd
+          .mapPartitions { it =>
+            // the whole shuffle block is read before the attempt fails,
+            // so the failed attempt reports non-zero read bytes
+            val rows = it.toVector
+            if (failFirstAttempt && TaskContext.get.attemptNumber == 0)
+              throw new IllegalStateException("transient failure on the first attempt")
+            rows.iterator
+          }.count()
+        TaskMetricsProbe.drain(sc)
+        probe.snapshot()
+      }
+      val clean = signature(failFirstAttempt = false)
+      val retried = signature(failFirstAttempt = true)
+      assert(clean._1 > 0, s"the reduce side must read shuffle bytes, got $clean")
+      assert(retried === clean, s"retried $retried vs clean $clean")
     } finally sc.removeSparkListener(probe)
   }
 
